@@ -716,13 +716,6 @@ def minhash_near_duplicates(docs: DataFrame, id_col: str = "doc_id",
     return _jaccard_for_pairs(candidates, sh_scope, threshold, max_shingle_df)
 
 
-def _hadoop_delete(spark, path: str) -> None:
-    """Back-compat alias — the implementation lives in itercut."""
-    from ocr_agent_spark.functions.itercut import _hadoop_delete as impl
-
-    impl(spark, path)
-
-
 def connected_components(pairs: DataFrame, max_iterations: int = 20,
                          strict: bool = True,
                          checkpoint_dir: str | None = None) -> DataFrame:
@@ -738,20 +731,27 @@ def connected_components(pairs: DataFrame, max_iterations: int = 20,
     shallow (stars/cliques → 2-3 rounds), but a 1000-hop chain now
     needs ~10 rounds, not 1000.
 
-    Each round's labels are lineage-CUT, not merely cached: the jump
-    step references the round's intermediate twice, so without a true
-    cut the analyzed plan doubles per round (cache substitution happens
-    at planning time but the logical tree keeps the full history) —
-    measured as analyzer OOM by round ~10. The cut is
-    ``localCheckpoint`` by default (executor-memory blocks — fine on
-    local mode, but a lost executor loses the blocks with NO lineage to
-    recompute them, killing the job). Pass ``checkpoint_dir`` (an
-    HDFS/S3 path on a cluster) to use reliable ``checkpoint()``
-    instead: same cut, rounds survive executor loss. At 100 TB always
-    set it. Superseded rounds' checkpoint files are deleted as the loop
-    advances (Spark itself never cleans reliable checkpoints); the
-    FINAL round's files back the returned DataFrame, so delete
-    ``checkpoint_dir`` only after consuming or persisting the result.
+    Lineage is CUT (``itercut.make_cutter``) by the rule every loop
+    here follows: cut loop-invariant inputs once, before the loop, and
+    cut each round. The edge table is read by every round, and the
+    caller's ``pairs`` usually carry a deep plan (``dedup_near``: exact
+    dedup, MinHash banding, verify join); merely persisted, that whole
+    lineage would be re-planned for each of a round's joins, so the
+    edges are cut once up front and every round plans against leaves
+    only. Each round's labels are cut too: the jump step references the
+    round's intermediate twice, so without a true cut the analyzed plan
+    doubles per round (cache substitution happens at planning time but
+    the logical tree keeps the full history) — measured as analyzer OOM
+    by round ~10. The cut is ``localCheckpoint`` by default
+    (executor-memory blocks — fine on local mode, but a lost executor
+    loses the blocks with NO lineage to recompute them, killing the
+    job). Pass ``checkpoint_dir`` (an HDFS/S3 path on a cluster) to use
+    reliable ``checkpoint()`` instead: same cuts, they survive executor
+    loss. At 100 TB always set it. Superseded rounds' checkpoint files
+    are deleted as the loop advances and the edge cut once it ends
+    (Spark itself never cleans reliable checkpoints); the FINAL round's
+    files back the returned DataFrame, so delete ``checkpoint_dir``
+    only after consuming or persisting the result.
 
     If the loop exhausts ``max_iterations`` before converging (a chain
     longer than the budget), the labels are WRONG for the unconverged
@@ -763,8 +763,6 @@ def connected_components(pairs: DataFrame, max_iterations: int = 20,
     Genuinely non-SQL-expressible (driver-side convergence loop) —
     exactly the class the driver records rows-only checks for.
     """
-    from ocr_agent_spark.cache import persist_tracked
-
     from ocr_agent_spark.functions.itercut import make_cutter
 
     spark = pairs.sparkSession
@@ -773,17 +771,23 @@ def connected_components(pairs: DataFrame, max_iterations: int = 20,
     # rounds' checkpoint files truly unreferenced.
     cut, gc_superseded = make_cutter(spark, checkpoint_dir)
 
-    edges = persist_tracked(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
+    # Both directions from ONE pass over `pairs` (an explode, not a
+    # union of two selects, which would evaluate the caller's pair
+    # lineage twice in the cut's job).
+    edges = cut(
+        pairs.select(F.explode(F.array(
+            F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+            F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
+        )).alias("_e"))
+        .select("_e.src", "_e.dst")
+        .distinct(),
+        invariant=True,
     )
-    labels = persist_tracked(
+    labels = cut(
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
         .withColumn("component", F.col("doc_id"))
     )
-    labels.count()
 
     changed = 0
     for _ in range(max_iterations):
@@ -827,12 +831,11 @@ def connected_components(pairs: DataFrame, max_iterations: int = 20,
             )
         )
         changed = new_labels.filter(F.col("component") != F.col("_prev")).count()
-        labels.unpersist()
         labels = new_labels
         gc_superseded()
         if changed == 0:
             break
-    edges.unpersist()
+    gc_superseded(loop_done=True)
     labels = labels.drop("_prev")
     if changed != 0:
         msg = (

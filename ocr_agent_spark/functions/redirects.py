@@ -44,34 +44,28 @@ def resolve_redirects(edges: DataFrame, max_hops: int = 32,
     outgoing edge is terminal. Duplicate-src rows are ambiguous input
     and raise (dedupe the fetch log first).
 
-    Each round's mapping is lineage-CUT (localCheckpoint by default;
-    pass ``checkpoint_dir`` on a real cluster for executor-loss-safe
-    reliable checkpoints — the same trade-off documented on
-    ``dedup.connected_components``): the doubling self-join references
-    the round's mapping twice, so without a true cut the analyzed
-    plan doubles per round (measured as driver heap OOM by round ~11
-    on a 1000-hop chain; cache substitution happens at planning time
-    but the logical tree keeps the full history).
+    Lineage is cut by ``itercut``'s rule (localCheckpoint, or reliable
+    checkpoints under ``checkpoint_dir`` on a real cluster): the edge
+    table once, before the loop, and each round's mapping, which the
+    doubling self-join references twice — without the cut the analyzed
+    plan doubles per round (driver heap OOM by round ~11 on a 1000-hop
+    chain). The result is cut as the final round: with
+    ``checkpoint_dir`` only its files remain; delete the directory
+    after consuming the result.
     """
-    from ocr_agent_spark.cache import persist_tracked
+    from ocr_agent_spark.functions.itercut import make_cutter
 
     if max_hops <= 0:
         raise ValueError(f"max_hops must be > 0, got {max_hops}")
-    spark = edges.sparkSession
+    cut, gc_superseded = make_cutter(edges.sparkSession, checkpoint_dir)
 
-    if checkpoint_dir is not None:
-        def cut(df: DataFrame) -> DataFrame:
-            spark.sparkContext.setCheckpointDir(checkpoint_dir)
-            return df.checkpoint(eager=True)
-    else:
-        def cut(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-
-    e = persist_tracked(
+    e = cut(
         edges.select(F.col(src_col).alias("src"),
-                     F.col(dst_col).alias("dst")).distinct()
+                     F.col(dst_col).alias("dst")).distinct(),
+        invariant=True,
     )
     if e.groupBy("src").count().filter(F.col("count") > 1).limit(1).count():
+        gc_superseded(loop_done=True)
         raise ValueError(
             "resolve_redirects: a src with multiple redirect targets "
             "is ambiguous — dedupe the fetch log first"
@@ -92,16 +86,19 @@ def resolve_redirects(edges: DataFrame, max_hops: int = 32,
                 .alias("hops"),
             )
         )
+        gc_superseded()
     terminal_srcs = e.select(F.col("src").alias("_t"))
     out = m.join(terminal_srcs, m["cur"] == terminal_srcs["_t"], "left")
     resolved = F.col("_t").isNull() & (F.col("hops") <= max_hops)
-    return out.select(
+    out = cut(out.select(
         "src",
         F.when(resolved, F.col("cur")).alias("final_url"),
         F.when(resolved, F.col("hops")).cast("int").alias("hops"),
         F.when(resolved, F.lit("resolved")).otherwise(F.lit("unresolved"))
         .alias("status"),
-    )
+    ))
+    gc_superseded(loop_done=True)
+    return out
 
 
 def resolve_redirects_sql(edges_expr: str, max_hops: int = 32) -> str:

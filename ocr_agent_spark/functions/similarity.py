@@ -647,7 +647,6 @@ def semantic_dedup_keep(embeddings: DataFrame, threshold: float = 0.95,
 
     Returns the kept ids (one column, ``id_col``).
     """
-    from ocr_agent_spark.cache import persist_tracked
     from ocr_agent_spark.functions.dedup import connected_components
 
     if exact:
@@ -657,13 +656,10 @@ def semantic_dedup_keep(embeddings: DataFrame, threshold: float = 0.95,
         pairs = embedding_near_duplicates(
             embeddings, threshold, id_col, vec_col, bands, rows_per_band,
             seed, max_bucket_size)
-    # persist before the component loop: every pointer-jumping round
-    # re-reads the pair table, and without the cut each round would
-    # re-run the whole LSH+verify pipeline (same contract as
-    # dedup.dedup_near's persisted candidates)
-    pairs = persist_tracked(pairs.select("id_a", "id_b"))
+    # read once, by connected_components' edge cut: no persist needed
     comps = connected_components(
-        pairs, max_iterations, checkpoint_dir=checkpoint_dir)
+        pairs.select("id_a", "id_b"), max_iterations,
+        checkpoint_dir=checkpoint_dir)
     drop = comps.filter(F.col("doc_id") != F.col("component")).select(
         F.col("doc_id").alias(id_col))
     return embeddings.select(id_col).join(drop, id_col, "left_anti")

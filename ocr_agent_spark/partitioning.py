@@ -28,6 +28,8 @@ from __future__ import annotations
 import math
 import os
 
+from py4j.protocol import Py4JError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 
 # One CPU-heavy task per this many PLAN-ESTIMATED bytes. The estimate
@@ -43,11 +45,34 @@ DEFAULT_WIDEN_BYTES_PER_TASK = 64 << 10
 
 
 def scan_partitions(df: DataFrame) -> int:
-    """Physical partition count of the plan feeding ``df`` (no job)."""
+    """Physical partition count of the plan feeding ``df``, decided
+    from the plan without running a job; -1 when only a job could tell.
+
+    Under adaptive execution a plan with an exchange (or a cache, whose
+    plan AQE also wraps) has a data-dependent partition count: AQE
+    coalesces the shuffle's partitions after its map stages have run,
+    so asking the RDD (``df.rdd.getNumPartitions()``) executes those
+    stages during plan construction, and the real action later runs
+    them again. Such plans report -1; a leaf plan's count is static.
+    """
     try:
-        return df.rdd.getNumPartitions()
-    except Exception:
+        qe = df._jdf.queryExecution()
+        if qe.executedPlan().nodeName() == "AdaptiveSparkPlan":
+            return -1
+        return qe.toRdd().getNumPartitions()
+    except (Py4JError, AnalysisException):
         return -1
+
+
+def _coalesced_partitions(df: DataFrame, size: int) -> int:
+    """Partitions AQE leaves after a shuffle of ``size`` bytes: it
+    coalesces toward ``advisoryPartitionSizeInBytes`` per partition."""
+    jvm = df.sparkSession.sparkContext._jvm
+    advisory = df.sparkSession._jsparkSession.sessionState().conf().getConf(
+        jvm.org.apache.spark.sql.internal.SQLConf
+        .ADVISORY_PARTITION_SIZE_IN_BYTES()
+    )
+    return max(1, math.ceil(size / int(advisory)))
 
 
 def _plan_size_bytes(df: DataFrame) -> int | None:
@@ -58,7 +83,7 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
             str(df._jdf.queryExecution().optimizedPlan().stats()
                 .sizeInBytes())
         )
-    except Exception:
+    except (Py4JError, AnalysisException):
         return None
     # 2^63-ish means "unknown" (Statistics.DEFAULT); treat as absent.
     if size <= 0 or size >= (1 << 62):
@@ -85,15 +110,21 @@ def widen_if_narrow(df: DataFrame, target: int | None = None,
     gains nothing from 2×cores partitions but pays scheduling for every
     downstream stage that reads them. When the estimate is unavailable
     the full target is used (the conservative pre-r8b behavior).
+
+    The decision never runs a job (see ``scan_partitions``). For a
+    non-leaf input under adaptive execution the current parallelism is
+    estimated from the same byte estimate — the partitions AQE's
+    coalescing would leave — and with no estimate the input passes
+    through untouched.
     """
     if target is None:
-        try:
-            target = int(
-                df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-            )
-        except Exception:
-            return df
+        target = int(
+            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+        )
     n = scan_partitions(df)
+    size = None if 2 * n >= target else _plan_size_bytes(df)
+    if n < 0 and size is not None:
+        n = _coalesced_partitions(df, size)
     if n < 0 or 2 * n >= target:
         return df
     if bytes_per_task is None:
@@ -101,7 +132,6 @@ def widen_if_narrow(df: DataFrame, target: int | None = None,
             "SPARK_GRAFT_WIDEN_BYTES_PER_TASK",
             str(DEFAULT_WIDEN_BYTES_PER_TASK),
         ))
-    size = _plan_size_bytes(df)
     need = target if size is None else max(
         1, min(target, math.ceil(size / bytes_per_task))
     )

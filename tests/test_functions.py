@@ -194,6 +194,90 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     assert len(rounds) == 1, rounds
 
 
+def _recording_cutter(monkeypatch, ckpt=None):
+    """Wrap itercut.make_cutter: record every cut's input plan and, with
+    a checkpoint dir, the directory listing after each gc call."""
+    import os
+
+    from ocr_agent_spark.functions import itercut
+
+    real = itercut.make_cutter
+    cuts, listings = [], []
+
+    def make_cutter(spark, checkpoint_dir):
+        cut, gc = real(spark, checkpoint_dir)
+
+        def rec_cut(df, invariant=False):
+            cuts.append((invariant, df._jdf.queryExecution().optimizedPlan()))
+            return cut(df, invariant=invariant)
+
+        def rec_gc(loop_done=False):
+            gc(loop_done=loop_done)
+            if ckpt is not None:
+                listings.append((loop_done, sorted(os.listdir(ckpt))))
+
+        return rec_cut, rec_gc
+
+    monkeypatch.setattr(itercut, "make_cutter", make_cutter)
+    return cuts, listings
+
+
+def test_connected_components_cuts_input_lineage_once(spark, monkeypatch):
+    """The edge table is cut once, before the loop, so no round plans
+    against the caller's pair lineage: labels equal those over a
+    createDataFrame copy of the same pairs, and every round's optimized
+    plan has only checkpoint (RDD) leaves."""
+    from pyspark.sql import Window
+
+    raw = spark.createDataFrame(
+        [(a, b, t) for t in range(3)
+         for a, b in [(1, 2), (2, 3), (3, 4), (10, 11), (10, 12), (20, 21)]],
+        "id_a long, id_b long, tag int",
+    )
+    w = Window.partitionBy("id_a", "id_b").orderBy("tag")
+    deep = (
+        raw.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .groupBy("id_a", "id_b").agg(F.max("tag").alias("tag"))
+        .select("id_a", "id_b")
+        .persist()
+    )
+    copy = spark.createDataFrame(deep.collect(), "id_a long, id_b long")
+    want = sorted(map(tuple, dedup.connected_components(copy).collect()))
+
+    cuts, _ = _recording_cutter(monkeypatch)
+    got = sorted(map(tuple, dedup.connected_components(deep).collect()))
+    deep.unpersist()
+    assert got == want
+    assert [inv for inv, _ in cuts].count(True) == 1 and cuts[0][0]
+    rounds = [plan for _, plan in cuts[1:]]
+    assert len(rounds) >= 2
+    for plan in rounds:
+        leaves = plan.collectLeaves()
+        names = {leaves.apply(i).nodeName() for i in range(leaves.size())}
+        assert names == {"LogicalRDD"}, plan.toString()
+
+
+def test_connected_components_edge_cut_outlives_rounds(spark, tmp_path,
+                                                       monkeypatch):
+    """With checkpoint_dir the edge cut is a reliable checkpoint that
+    every round's gc leaves in place; once the loop ends it is deleted
+    and only the final round's files remain."""
+    ckpt = str(tmp_path / "cc_ckpt")
+    _, listings = _recording_cutter(monkeypatch, ckpt)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(20)], "id_a long, id_b long"
+    )
+    comps = dedup.connected_components(pairs, checkpoint_dir=ckpt)
+    assert {r["component"] for r in comps.collect()} == {0}
+    *rounds, (loop_done, final) = listings
+    assert len(rounds) >= 2 and loop_done
+    for done, names in rounds:
+        assert not done
+        assert [n for n in names if n.startswith("invariant-")], names
+    assert len(final) == 1 and final[0].startswith("round-"), final
+
+
 def test_connected_components_folded_convergence_check(spark):
     """The convergence count is folded into the round's checkpoint (the
     previous label rides along as _prev; changed = filter+count over the

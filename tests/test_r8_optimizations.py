@@ -57,6 +57,26 @@ def test_widen_if_narrow_sizes_by_plan_bytes(spark):
     assert big.rdd.getNumPartitions() == 8
 
 
+def test_widen_runs_no_job_during_plan_construction(spark):
+    # dedup_exact's window puts an exchange under the shingle stage's
+    # widen check; asking that plan for its partition count would make
+    # AQE run the shuffle stages before any action. Construction must
+    # stay job-free: the decision comes from the plan alone.
+    from ocr_agent_spark.functions.dedup import dedup_exact, minhash_near_duplicates
+
+    rows = [(i, f"alpha beta gamma delta epsilon zeta doc {i % 7} tail")
+            for i in range(60)]
+    sc = spark.sparkContext
+    sc.setJobGroup("widen-build", "minhash construction only")
+    try:
+        pairs = minhash_near_duplicates(
+            dedup_exact(_docs(spark, rows)), threshold=0.3)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("widen-build") == []
+    assert pairs.count() > 0
+
+
 def test_widen_preserves_dedup_results(spark):
     # The widened shingle path must produce identical minhash pairs to
     # a manually-parallel input (placement must never change values).

@@ -66,3 +66,18 @@ def test_ambiguous_src_raises(spark):
 def test_invalid_max_hops(spark):
     with pytest.raises(ValueError):
         resolve_redirects(_edges(spark, [("a", "b")]), max_hops=0)
+
+
+def test_reliable_checkpoint_leaves_only_final_round(spark, tmp_path):
+    # checkpoint_dir switches every cut to a reliable checkpoint; the
+    # edge cut and all superseded rounds are deleted, so a deep chain
+    # cannot leave one table copy per round behind
+    import os
+
+    ckpt = str(tmp_path / "redir_ckpt")
+    rows = [(f"u{i}", f"u{i+1}") for i in range(40)]
+    out = {r["src"]: r for r in resolve_redirects(
+        _edges(spark, rows), max_hops=64, checkpoint_dir=ckpt).collect()}
+    assert out["u0"]["final_url"] == "u40" and out["u0"]["hops"] == 40
+    left = os.listdir(ckpt)
+    assert len(left) == 1 and left[0].startswith("round-"), left

@@ -1,12 +1,14 @@
 """S2 input triage: the five-category discovery report.
 
-Behavioral parity with /root/reference/src/ocr_agent/input_discovery.py
-:56-97 (InputDiscoveryReport) — differential-tested against the
-reference implementation itself (imported from /root/reference/src for
-testing only, never at runtime).
+Behavioral parity with the reference's ``ocr_agent/input_discovery.py``
+:56-109 (``discover_input_paths_in_enqueue_order`` →
+``InputDiscoveryReport``), checked against that function's report on
+the fixture tree below, pinned in-repo as expected values
+(``_reference_report``).
 """
 
-import sys
+from pathlib import Path
+from types import SimpleNamespace
 
 from pyspark.sql import functions as F
 
@@ -61,20 +63,31 @@ def test_discover_inputs_categories_and_order(tmp_path):
     ]
 
 
+def _reference_report(root: Path) -> SimpleNamespace:
+    """The reference's ``InputDiscoveryReport`` for ``_fixture_tree``.
+
+    Its semantics (SURVEY §S1/S2): inputs keep argument order; a file
+    is supported iff its lowercased suffix is an image/PDF extension,
+    else unsupported; a directory expands to ``sorted(rglob("*"))``
+    supported files, or is reported as having none; a path that does
+    not exist is missing; anything else is unknown.
+    """
+    return SimpleNamespace(
+        supported_file_paths_in_enqueue_order=[
+            root / "a.png", root / "b.PDF",
+            root / "docs" / "a.jpeg", root / "docs" / "z.jpg",
+        ],
+        missing_input_paths=[root / "gone.pdf"],
+        unsupported_input_file_paths=[root / "notes.txt"],
+        directories_with_no_supported_files=[root / "empty"],
+        unknown_input_paths=[],
+    )
+
+
 def test_discover_inputs_matches_reference(tmp_path):
-    from pathlib import Path
-
-    sys.path.insert(0, "/root/reference/src")
-    try:
-        from ocr_agent.input_discovery import (
-            discover_input_paths_in_enqueue_order,
-        )
-    finally:
-        sys.path.remove("/root/reference/src")
-
     inputs = _fixture_tree(tmp_path)
     supported, rows = discover_input_rows(inputs)
-    ref = discover_input_paths_in_enqueue_order([Path(p) for p in inputs])
+    ref = _reference_report(tmp_path)
 
     assert [Path(p) for p in supported] == ref.supported_file_paths_in_enqueue_order
     cats = dict(rows)
